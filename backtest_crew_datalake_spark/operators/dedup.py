@@ -67,29 +67,30 @@ def dedupe_keep(
     if keep not in ("first", "last"):
         raise ValueError("keep must be 'first' or 'last'")
     key = list(key)
-    others = [c for c in df.columns if c not in key]
-    row = F.struct(*[F.col(c) for c in others])
-    # The ordering struct may hold only ORDERABLE types — a MapType
-    # non-key column in the comparison key would raise AnalysisException
-    # (maps have no ordering). Unorderable columns enter the ordering
-    # as their JSON serialization instead, keeping the winner a
-    # deterministic function of the full row.
     fields = {f.name: f.dataType for f in df.schema.fields}
-    det_row = [
-        F.col(c) if _orderable(fields[c]) else F.to_json(F.col(c))
-        for c in others
-    ]
-    if order is None:
-        ordk = F.struct(*det_row) if others else F.lit(0)
-        pick = F.min_by(row, ordk) if keep == "first" else F.max_by(row, ordk)
-    else:
-        ordk = F.struct(
-            *[F.col(c) if isinstance(c, str) else c for c in order],
-            *det_row,
-        )
-        pick = F.max_by(row, ordk) if keep == "last" else F.min_by(row, ordk)
-    out = df.groupBy(*key).agg(pick.alias("__row")).select(
-        *key, F.col("__row.*")
+    others = [c for c in df.columns if c not in key]
+    # The packed row and the row's share of the ordering key are each ONE
+    # SQL expression, so the plan costs a few py4j calls however wide the
+    # row is. The ordering
+    # struct may hold only ORDERABLE types — a MapType non-key column in
+    # the comparison key would raise AnalysisException (maps have no
+    # ordering). Unorderable columns enter the ordering as their JSON
+    # serialization instead, keeping the winner a deterministic function of
+    # the full row.
+    q = quote_ident
+    cols = [F.col(c) if isinstance(c, str) else c for c in order or []]
+    det = [q(c) if _orderable(fields[c]) else f"to_json({q(c)})" for c in others]
+    if det:  # a nested struct compares the same as its fields appended flat
+        cols.append(F.expr(f"struct({', '.join(det)})"))
+    ordk = F.struct(*cols) if cols else F.lit(0)
+    fn = F.min_by if keep == "first" else F.max_by
+    pick = fn(F.expr(f"struct({', '.join(map(q, others))})"), ordk)
+    # restore the caller's column order in the same projection
+    return df.groupBy(*key).agg(pick.alias("__row")).selectExpr(
+        *[q(c) if c in key else f"__row.{q(c)} AS {q(c)}" for c in df.columns]
     )
-    # restore the caller's column order
-    return out.select(*df.columns)
+
+
+def quote_ident(name: str) -> str:
+    """``name`` as a backquoted SQL identifier, for plans built as SQL text."""
+    return "`" + name.replace("`", "``") + "`"

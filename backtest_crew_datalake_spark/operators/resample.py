@@ -13,22 +13,28 @@ Semantics of ref src/datalake/aggregates/aggregate.py:28-45 (pandas
   OHLC across empty buckets (volume of an empty bucket is 0.0, pandas
   sum-of-empty), drop rows whose OHLC is still null (aggregate.py:43-44).
 
-Spark shape: groupBy(window) with min_by/max_by (JVM-side, no Python);
-grid via per-group sequence+explode; ffill via last(ignorenulls) window.
-Shuffles: one for the groupBy keyed (by, bucket), one window keyed (by) —
-at 100 TB both are keyed by symbol so they are narrow and skew-free (symbols
-are roughly uniform); no global sort anywhere.
+Spark shape: keep-last dedupe, then groupBy(by, bucket) with min_by/max_by
+(JVM-side, no Python), then ONE window over the aggregated buckets, keyed
+(by) and ordered by bucket, that forward-fills each OHLC column with
+last(ignorenulls) and finds the next bucket with lead. Each bucket explodes
+into itself plus the empty buckets before the next one, so the grid needs
+no second aggregate and no join back. The dedupe (by, ts), the aggregate
+(by, bucket) and the window (by) each need their rows clustered; an input
+hash-partitioned on ``by`` alone, as the backtest provider returns it,
+satisfies all three, so the resample adds no exchange. At 100 TB the key is
+the symbol, roughly uniform, so the partitions stay skew-free; no global
+sort anywhere.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.timeframes import tf_seconds
-from .dedup import dedupe_keep
+from .dedup import dedupe_keep, quote_ident
 
 OHLC = ["open", "high", "low", "close"]
 
@@ -67,27 +73,24 @@ def resample_ohlcv(
         return agged.withColumnRenamed("__bucket", ts_col)
 
     # Complete per-group bucket grid [min_bucket, max_bucket] (pandas resample
-    # materializes every bucket in between; ref aggregate.py:41-44).
-    grid = (
-        agged.groupBy(*by)
-        .agg(F.min("__bucket").alias("__b0"), F.max("__bucket").alias("__b1"))
-        .select(
-            *by,
-            F.explode(
-                F.sequence("__b0", "__b1", F.expr(f"INTERVAL {secs} SECOND"))
-            ).alias("__bucket"),
-        )
+    # materializes every bucket in between; ref aggregate.py:41-44): each
+    # bucket explodes into itself plus the empty buckets before the next
+    # one, which carry its forward-filled OHLC.
+    keys, ts = [quote_ident(c) for c in by], quote_ident(ts_col)
+    w = f"PARTITION BY {', '.join(keys)} " if by else ""
+    w += "ORDER BY __bucket"
+    step = f"INTERVAL {secs} SECOND"
+    filled = agged.selectExpr(
+        *keys, "__bucket", "volume",
+        *[f"last({c}, true) OVER ({w} ROWS BETWEEN UNBOUNDED PRECEDING "
+          f"AND CURRENT ROW) AS {c}" for c in OHLC],
+        f"lead(__bucket) OVER ({w}) AS __next",
     )
-    w = (
-        Window.partitionBy(*by)
-        .orderBy("__bucket")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    filled = grid.join(agged, on=[*by, "__bucket"], how="left")
-    for c in OHLC:
-        filled = filled.withColumn(c, F.last(c, ignorenulls=True).over(w))
-    return (
-        filled.withColumn("volume", F.coalesce("volume", F.lit(0.0)))
-        .na.drop(subset=OHLC)
-        .withColumnRenamed("__bucket", ts_col)
-    )
+    return filled.selectExpr(
+        *keys, *OHLC, "volume", "__bucket",
+        f"explode(sequence(__bucket, coalesce(__next - {step}, __bucket), "
+        f"{step})) AS {ts}",
+    ).selectExpr(
+        *keys, ts, *OHLC,
+        f"IF({ts} = __bucket, coalesce(volume, 0D), 0D) AS volume",
+    ).na.drop(subset=OHLC)

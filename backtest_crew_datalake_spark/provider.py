@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .functions.timeframes import normalize_tf
 from .operators.resample import resample_ohlcv
-from .sources.lake import read_range
+from .sources.lake import read_range, read_range_by_symbol
 
 
 def load_exec_and_filter(
@@ -34,7 +34,7 @@ def load_exec_and_filter(
     otherwise resample the M1 base on the fly (A1).
     """
     etf, ftf = normalize_tf(exec_tf), normalize_tf(filter_tf)
-    base = read_range(
+    base = read_range_by_symbol(
         spark, lake_root, symbol=symbol, timeframe=etf,
         date_from=start, date_to=end, source=source, market=market,
     )
@@ -64,7 +64,7 @@ def _read_aggregate(
     )
     if not glob.glob(pat):
         return None
-    return read_range(
+    return read_range_by_symbol(
         spark, lake_root, symbol=symbol, timeframe=tf,
         date_from=start, date_to=end, source=source, market=market,
         dataset="aggregates",

@@ -3611,10 +3611,12 @@ def q_doc_curation(spark, sf_dir):
         .agg(F.collect_list("sh").alias("__bs"))
     )
     toks = tokens(F.col("text"))
-    tg = F.transform(
+    # a document of < 3 tokens has no trigram: the guard keeps its
+    # sequence from descending into slice(toks, 0, 3), which throws
+    tg = F.when(F.size(toks) >= 3, F.transform(
         F.sequence(F.lit(0), F.size(toks) - 3),
         lambda i: F.concat_ws(" ", F.slice(toks, i + 1, 3)),
-    )
+    )).otherwise(F.array())
     # __sh ≡ _shingles("text", 3); dup_frac ≡ dup_ngram_frac("text", 3)
     # — same expressions, evaluated over the shared __tg/__ntk columns
     sh_col = F.when(

@@ -1,4 +1,4 @@
-from .lake import read_range, read_day, LAYOUT_PARTITIONS  # noqa: F401
+from .lake import read_range, read_range_by_symbol, read_day, LAYOUT_PARTITIONS  # noqa: F401
 from .writer import upsert_candles, write_levels  # noqa: F401
 from .synth import make_m1  # noqa: F401
 from .acid import (  # noqa: F401

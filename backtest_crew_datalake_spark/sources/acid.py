@@ -755,12 +755,14 @@ def _read_entries(spark, data_root, entries, schema_ddl, with_meta=False):
         if with_meta:
             # positional-delete coordinates: the hidden _metadata struct
             # must be projected on the SCAN df (it is not resolvable after
-            # a union), file path decoded to the local filesystem form
+            # a union), file path decoded to the local filesystem form.
+            # The path is a URI: percent-escapes decode, but a literal '+'
+            # must stay a '+' (url_decode would read it as a space)
             part = part.select(
                 "*",
                 F.expr(
-                    "concat('/', regexp_replace(url_decode("
-                    "_metadata.file_path), '^file:/+', ''))"
+                    "concat('/', regexp_replace(url_decode(replace("
+                    "_metadata.file_path, '+', '%2B')), '^file:/+', ''))"
                 ).alias("__abs"),
                 F.col("_metadata.row_index").alias("__pos"),
             )
@@ -856,11 +858,17 @@ def _snapshot_df(spark, data_root, manifest, entries=None, keep_pos=False):
     ]
     lut = spark.createDataFrame(
         pairs, "__abs string, __mpath string, __seq long")
-    # left join: a LUT miss (path-form drift) must keep the row — a null
-    # __mpath can never match a delete pair and a null __seq keeps the
-    # row below, so drift degrades to "delete not applied" loudly in
-    # tests, never to lost rows
-    out = out.join(F.broadcast(lut), "__abs", "left").drop("__abs")
+    # a LUT miss (path-form drift) would leave __mpath and __seq null,
+    # which match no delete: the row would be kept with its deletes
+    # silently skipped. Fail the read instead (raise_error inside the
+    # filter, so the plan stays lazy)
+    miss = F.raise_error(F.lit(
+        "acid_read: a scanned file is missing from the manifest path "
+        "lookup, so its deletes cannot be applied"))
+    out = (
+        out.join(F.broadcast(lut), "__abs", "left").drop("__abs")
+        .where(F.when(F.col("__seq").isNull(), miss).otherwise(F.lit(True)))
+    )
     if pdels:
         # one read for ALL pos-delete files (identical (__file, __pos)
         # schema by construction) — not one schema-inferring read each
@@ -903,10 +911,7 @@ def _snapshot_df(spark, data_root, manifest, entries=None, keep_pos=False):
     dmax = ddf.groupBy(*key).agg(F.max("__dseq").alias("__dseq"))
     return (
         out.join(dmax, key, "left")
-        # null __seq = path-LUT drift: keep the row (delete not applied),
-        # the same loud-degradation convention as the __mpath join above
-        .where(F.col("__dseq").isNull() | F.col("__seq").isNull()
-               | (F.col("__dseq") < F.col("__seq")))
+        .where(F.col("__dseq").isNull() | (F.col("__dseq") < F.col("__seq")))
         .drop("__dseq", "__seq")
     )
 

@@ -7,6 +7,12 @@ Hive layout: ``spark.read.parquet(root/data)`` discovers the partition columns
 and Catalyst prunes partitions + pushes the ts range into the parquet scan
 (row-group min/max skipping — the writer sorts files by ts to make that bite).
 
+Spark shape: ``read_range``'s keep-first dedupe is a hash aggregate on its
+key, so a long single-series read spreads its raw rows over every shuffle
+partition. ``read_range_by_symbol``, which the backtest provider uses, instead
+hash-partitions on ``symbol`` once, the exchange every per-symbol window
+downstream would need anyway.
+
 Global contract preserved (api.py:62-72): half-open [from, to) range, ts UTC,
 sorted, duplicates dropped keep-first.
 """
@@ -51,6 +57,43 @@ def read_range(
     (ref reader.py:30 half-done column pruning — here it's complete).
     Empty lake -> empty typed DataFrame, not an error (ref tests/test_read_api.py).
     """
+    df = _select(spark, lake_root, market=market, timeframe=timeframe,
+                 symbol=symbol, date_from=date_from, date_to=date_to,
+                 source=source, columns=columns, dataset=dataset)
+    # single-series reads keep the reference contract (dedupe on ts,
+    # api.py:70); multi-symbol reads dedupe per series
+    if dedupe:
+        key = ["symbol", "ts"] if isinstance(symbol, (list, tuple)) else ["ts"]
+        df = dedupe_keep(df, key=key, order=None, keep="first")
+    # Sort within partitions only — a global orderBy is a full-range shuffle
+    # that the consumer (window ops partitioned by symbol) doesn't need.
+    return df.sortWithinPartitions("ts")
+
+
+def read_range_by_symbol(spark: SparkSession, lake_root: str,
+                         **kw) -> DataFrame:
+    """``read_range`` (same keywords but ``columns`` and ``dedupe``),
+    hash-partitioned on ``symbol`` ahead of its keep-first dedupe on
+    (symbol, ts) — for one symbol, the read contract's dedupe on ts.
+
+    Spark shape: that one exchange satisfies every per-symbol operator
+    downstream — resample's aggregate and window, the as-of window, the
+    opening-range window — so a backtest request on the result shuffles
+    once. Those windows need each symbol's rows together at any scale, so
+    the exchange moves nothing they would not. The price is that a
+    series' raw rows dedupe in one task; a long read that only aggregates
+    is better served by ``read_range``, whose dedupe spreads over every
+    shuffle partition."""
+    df = _select(spark, lake_root, columns=None, **kw)
+    return dedupe_keep(df.repartition("symbol"), key=["symbol", "ts"],
+                       order=None, keep="first").sortWithinPartitions("ts")
+
+
+def _select(spark, lake_root, *, market="crypto", timeframe="M1", symbol,
+            date_from=None, date_to=None, source="ibkr", columns=None,
+            dataset="data") -> DataFrame:
+    """``read_range`` before its dedupe and sort: the pruned, filtered and
+    projected scan."""
     multi = isinstance(symbol, (list, tuple))
     try:
         df = _scan(spark, lake_root, dataset)
@@ -94,19 +137,12 @@ def read_range(
     if date_to is not None:
         df = df.where(F.col("ts") < F.lit(date_to).cast("timestamp"))
         df = df.where(ym <= F.date_format(F.lit(date_to).cast("timestamp"), "yyyyMM"))
-    # single-series reads keep the reference contract (dedupe on ts,
-    # api.py:70); multi-symbol reads dedupe per series
     if columns is not None:
         keep = ["ts", *[c for c in columns if c != "ts"]]
         if multi and "symbol" not in keep:
             keep.append("symbol")  # dedupe/grouping key must survive pruning
         df = df.select(*keep)
-    if dedupe:
-        key = ["symbol", "ts"] if multi else ["ts"]
-        df = dedupe_keep(df, key=key, order=None, keep="first")
-    # Sort within partitions only — a global orderBy is a full-range shuffle
-    # that the consumer (window ops partitioned by symbol) doesn't need.
-    return df.sortWithinPartitions("ts")
+    return df
 
 
 def read_day(

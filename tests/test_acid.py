@@ -1192,6 +1192,63 @@ def test_mor_delete_read_time_travel_and_no_rewrite(spark, tmp_path):
     assert _snapshot(pr) == [("A", "d1", 1, 1.0)]
 
 
+def test_mor_deletes_apply_under_plus_paths(spark, tmp_path):
+    """A '+' in the table root or in a partition value stays a '+' when
+    scan paths are mapped back to manifest paths: equality and positional
+    deletes both apply to such files."""
+    from backtest_crew_datalake_spark.sources.acid import (
+        acid_delete_mor, acid_delete_pos,
+    )
+
+    root = str(tmp_path / "a+b" / "t")
+    acid_write(spark, _mk(spark, [("A+", "d1", 1, 1.0), ("A+", "d1", 2, 2.0),
+                                  ("A+", "d1", 3, 3.0), ("B", "d1", 1, 5.0)]),
+               root, partition_by=PARTS)
+    acid_delete_mor(spark, root, spark.createDataFrame(
+        [("A+", "d1", 2)], "sym string, day string, ts bigint"), key=KEY)
+    assert acid_delete_pos(spark, root, "ts = 3") is not None
+    assert _snapshot(acid_read(spark, root)) == [
+        ("A+", "d1", 1, 1.0), ("B", "d1", 1, 5.0)]
+
+
+@pytest.mark.parametrize("deletes", ["equality", "positional"])
+def test_mor_delete_path_lut_miss_fails_loudly(spark, tmp_path, monkeypatch,
+                                               deletes):
+    """A scanned file the manifest path lookup cannot map back must fail
+    the read while deletes are live, not keep its rows with the delete
+    silently skipped. The drift is injected into the scan's decoded path
+    of one partition's files."""
+    from pyspark.sql import functions as F
+
+    from backtest_crew_datalake_spark.sources import acid
+
+    root = str(tmp_path / "t")
+    acid_write(spark, _mk(spark, [("A", "d1", 1, 1.0), ("A", "d1", 2, 2.0),
+                                  ("B", "d1", 1, 5.0)]),
+               root, partition_by=PARTS)
+    if deletes == "equality":
+        acid.acid_delete_mor(spark, root, spark.createDataFrame(
+            [("A", "d1", 2)], "sym string, day string, ts bigint"), key=KEY)
+    else:
+        acid.acid_delete_pos(spark, root, "ts = 2")
+    assert _snapshot(acid_read(spark, root)) == [
+        ("A", "d1", 1, 1.0), ("B", "d1", 1, 5.0)]
+
+    read_entries = acid._read_entries
+
+    def drifted(*args, **kwargs):
+        out = read_entries(*args, **kwargs)
+        if kwargs.get("with_meta"):
+            out = out.withColumn("__abs", F.when(
+                F.col("sym") == "A", F.concat("__abs", F.lit("~"))
+            ).otherwise(F.col("__abs")))
+        return out
+
+    monkeypatch.setattr(acid, "_read_entries", drifted)
+    with pytest.raises(Exception, match="missing from the manifest path"):
+        acid_read(spark, root).collect()
+
+
 def test_mor_delete_sequence_semantics_reinsert(spark, tmp_path):
     """A key deleted at seq S and upserted at seq > S is VISIBLE (the
     delete applies only to files at-or-before it)."""

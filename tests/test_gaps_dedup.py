@@ -143,3 +143,36 @@ def test_dedupe_keep_all_unorderable_non_key(spark):
     df = spark.createDataFrame(rows, schema).repartition(4)
     first = dedupe_keep(df, key=["key"], order=None, keep="first").collect()
     assert len(first) == 1 and first[0]["meta"] == {"a": 1}
+
+
+def test_dedupe_keep_order_ties_break_on_map_json(spark):
+    """With ``order`` given, rows tying on it fall back to the full row,
+    map columns by their to_json form."""
+    from pyspark.sql import types as T
+
+    schema = T.StructType([
+        T.StructField("key", T.StringType()),
+        T.StructField("prio", T.IntegerType()),
+        T.StructField("meta", T.MapType(T.StringType(), T.StringType())),
+    ])
+    rows = [("k", 1, {"x": "2"}), ("k", 1, {"x": "3"}), ("k", 0, {"x": "9"}),
+            ("k", 1, {"x": "1"})]
+    df = spark.createDataFrame(rows, schema).repartition(4)
+    last = dedupe_keep(df, key=["key"], order=["prio"], keep="last").collect()
+    first = dedupe_keep(df, key=["key"], order=["prio"], keep="first").collect()
+    assert [tuple(r) for r in last] == [("k", 1, {"x": "3"})]
+    assert [tuple(r) for r in first] == [("k", 0, {"x": "9"})]
+
+
+def test_dedupe_keep_column_typed_order(spark):
+    """``order`` may hold Column expressions; the full-row tiebreak still
+    applies after them, and the caller's column order is kept."""
+    df = spark.createDataFrame(
+        [(3, "k", "b"), (1, "k", "z"), (3, "k", "a"), (2, "j", "q")],
+        "prio int, key string, tag string").repartition(3)
+    neg = -F.col("prio")
+    last = dedupe_keep(df, key=["key"], order=[neg], keep="last")
+    assert last.columns == ["prio", "key", "tag"]
+    assert sorted(map(tuple, last.collect())) == [(1, "k", "z"), (2, "j", "q")]
+    first = dedupe_keep(df, key=["key"], order=[neg, "tag"], keep="first")
+    assert sorted(map(tuple, first.collect())) == [(2, "j", "q"), (3, "k", "a")]

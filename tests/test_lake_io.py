@@ -674,3 +674,36 @@ def test_compact_partitions_zorder_clusters(spark, tmp_path):
     assert total >= 2
     # a thin y-slice must skip at least half the row groups
     assert cand / total <= 0.5, (cand, total)
+
+
+def test_read_range_by_symbol_same_rows_and_schema(spark, tmp_path):
+    """read_range_by_symbol returns read_range's rows and schema (names,
+    types, order) for a hit, for a symbol the non-empty lake lacks, and
+    for an empty lake, which keeps the candle schema."""
+    from pyspark.sql import types as T
+
+    from backtest_crew_datalake_spark.schemas import CANDLE_SCHEMA
+    from backtest_crew_datalake_spark.sources.lake import read_range_by_symbol
+
+    def schema(df):
+        return [(f.name, f.dataType) for f in df.schema.fields]
+
+    root = str(tmp_path / "lake")
+    upsert_candles(spark, enforce_schema(make_m1(
+        spark, ["BTC-USD", "ETH-USD"], "2024-01-31", "2024-02-01",
+        seed=2), timeframe="M1"), root)
+    want = schema(spark.read.option("basePath", f"{root}/data")
+                  .parquet(f"{root}/data"))
+    assert dict(want)["year"] == dict(want)["month"] == T.IntegerType()
+    empty_root = str(tmp_path / "nolake")
+    for lake, sym, n, cols in ((root, "BTC-USD", 1440, want),
+                               (root, "XRP-USD", 0, want),
+                               (empty_root, "BTC-USD", 0, [
+                                   (f.name, f.dataType)
+                                   for f in CANDLE_SCHEMA])):
+        kw = dict(symbol=sym, date_from="2024-02-01", date_to="2024-02-02")
+        plain = read_range(spark, lake, **kw)
+        by_sym = read_range_by_symbol(spark, lake, **kw)
+        assert schema(plain) == schema(by_sym) == cols
+        assert sorted(by_sym.collect()) == sorted(plain.collect())
+        assert len(plain.collect()) == n

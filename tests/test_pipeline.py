@@ -2569,3 +2569,39 @@ def test_q_multimodal_scene_cuts_matches_bruteforce(spark):
             assert got.first_cut_idx == cuts[0]
         else:
             assert got.first_cut_idx is None or np.isnan(got.first_cut_idx)
+
+
+def test_curation_short_documents(spark, tmp_path):
+    """q_doc_curation over documents of 0-2 tokens: no crash (their
+    trigram array is empty, not a descending sequence), and the result
+    still equals its DuckDB oracle."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from backtest_crew_datalake_spark.queries import all_queries
+
+    sentence = "spark reads the lake and joins every context bar as of its ts"
+    texts = {
+        0: "the eval suite holds this exact benchmark sentence here",  # bench
+        20: "x the eval suite holds this exact benchmark sentence",  # contam.
+        21: sentence, 22: sentence,  # second copy is a duplicate
+        23: " ".join(["same old words"] * 6),  # repetitive
+        30: "two words", 31: "one", 32: "",
+    }
+    docs = pa.table({
+        "doc_id": pa.array(list(texts), pa.int64()),
+        "text": list(texts.values()),
+        "lang": ["en"] * len(texts),
+        "source": [("web", "news")[i % 2] for i in range(len(texts))],
+        "n_chars": pa.array([len(t) for t in texts.values()], pa.int64()),
+    })
+    pq.write_table(docs, tmp_path / "documents.parquet")
+    q = all_queries()["q_doc_curation"]
+    got = sorted(tuple(r) for r in q.build(spark, str(tmp_path)).collect())
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM "
+                f"read_parquet('{tmp_path}/documents.parquet')")
+    want = sorted(con.execute(q.oracle).fetchall())
+    assert got == want
+    assert {s for _, s, _, _ in got} >= {"low_quality", "kept"}

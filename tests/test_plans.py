@@ -762,3 +762,36 @@ def test_hll_rollup_grouping_sets_no_persist_no_grid(spark):
     assert "Exchange rangepartitioning" not in p
     # events is scanned once per tier (sketch + exact), never more
     assert p.count("FileScan parquet") <= 3
+
+
+def test_backtest_request_shuffles_once(spark, tmp_path):
+    """A backtest request — provider exec + M5, an H1 resample, join_mtf,
+    opening-range levels — runs on the one exchange the provider's read
+    makes, hash-partitioned on symbol: it satisfies the resample aggregates and
+    windows, the as-of window and the levels window, and no join is
+    planned. Exchanges are counted in the executed adaptive plan, where a
+    reused exchange shows as ReusedExchange."""
+    import re
+
+    from backtest_crew_datalake_spark.operators import (
+        build_or_levels, join_mtf, resample_ohlcv)
+    from backtest_crew_datalake_spark.provider import load_exec_and_filter
+    from backtest_crew_datalake_spark.sources.synth import make_m1
+    from backtest_crew_datalake_spark.sources.writer import upsert_candles
+
+    root = str(tmp_path / "lake")
+    upsert_candles(spark, make_m1(spark, ["BTC-USD", "ETH-USD"],
+                                  "2024-01-30", "2024-02-02", seed=4), root)
+    ex, m5 = load_exec_and_filter(spark, root, "BTC-USD",
+                                  "2024-01-31", "2024-02-02")
+    joined = join_mtf(ex, {"M5": m5, "H1": resample_ohlcv(ex, "H1")},
+                      by=["symbol"])
+    levels = build_or_levels(ex)
+    assert len(joined.collect()) == 2 * 1440
+    assert len(levels.collect()) == 2
+    for df in (joined, levels):
+        final = df._jdf.queryExecution().executedPlan().toString().split(
+            "== Initial Plan ==")[0]
+        assert re.findall(r"^[\s:+-]*Exchange (\w+)\((\w+)#", final,
+                          re.M) == [("hashpartitioning", "symbol")]
+        assert "SortMergeJoin" not in final

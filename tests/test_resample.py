@@ -3,6 +3,8 @@ exact per-day counts 1440→288/96/48/24/1, first-bucket left label,
 idempotence, and a differential check vs the pandas resample oracle
 (ref tests/test_resample_offline.py:6-38)."""
 
+from datetime import datetime, timedelta
+
 import pandas as pd
 import pytest
 
@@ -76,3 +78,31 @@ def test_gappy_day_ffill(spark):
     b05 = out[out.ts == pd.Timestamp("2024-02-01 00:05:00")].iloc[0]
     assert b10.volume == 0.0
     assert b10.close == b05.close  # ffilled
+
+
+def test_null_ohlc_in_nonempty_bucket_ffilled_per_column(spark):
+    """A bucket whose bars hold a null open (on its first bar) and null
+    highs takes those columns from the bucket before it, each column on its
+    own; an empty bucket after it carries every column with volume 0."""
+    t0 = datetime(2024, 1, 1)
+    rows = [
+        (t0, 1.0, 5.0, 0.5, 2.0, 10.0),
+        (t0 + timedelta(minutes=5), None, None, 0.2, 3.0, 1.0),
+        (t0 + timedelta(minutes=6), 4.0, None, 0.3, 3.5, None),
+        (t0 + timedelta(minutes=15), 6.0, 7.0, 5.5, 6.5, 2.0),
+    ]
+    df = spark.createDataFrame(
+        [("X", *r) for r in rows],
+        "symbol string, ts timestamp, open double, high double, low double, "
+        "close double, volume double")
+    got = resample_ohlcv(df, "M5").orderBy("ts").toPandas()
+    assert list(got.columns) == ["symbol", "ts", "open", "high", "low",
+                                 "close", "volume"]
+    assert got["ts"].tolist() == [t0 + timedelta(minutes=m)
+                                  for m in (0, 5, 10, 15)]
+    assert got[["open", "high", "low", "close", "volume"]].values.tolist() == [
+        [1.0, 5.0, 0.5, 2.0, 10.0],
+        [1.0, 5.0, 0.2, 3.5, 1.0],   # open, high ffilled; own low/close
+        [1.0, 5.0, 0.2, 3.5, 0.0],   # empty bucket
+        [6.0, 7.0, 5.5, 6.5, 2.0],
+    ]
